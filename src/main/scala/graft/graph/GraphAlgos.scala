@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
 
 import graft.schema.GraphSchema.{DstCol, IdCol, SrcCol}
@@ -28,15 +29,16 @@ import graft.schema.GraphSchema.{DstCol, IdCol, SrcCol}
 object GraphAlgos {
 
   /** Project a PropertyGraph (optionally restricted to some relations) to a
-    * GraphX graph. Vertex attr = (label, original id); edge attr = relation
-    * name. Returns the graph plus the pinned dictionary (id → vid) for
-    * callers that need a specific vertex (e.g. BFS start).
+    * GraphX graph. Vertex attr = (label, original id as a string, whatever
+    * the graph's id type); edge attr = relation name. Returns the graph
+    * plus the pinned dictionary (string id `nid` → vid) for callers that
+    * need a specific vertex (e.g. BFS start).
     */
   def toGraphX(g: PropertyGraph, relations: Seq[String] = Seq.empty)
       : (Graph[(String, String), String], DataFrame) = {
     val rels = if (relations.isEmpty) g.schema.relationDefs.map(_.name) else relations
     val dict = g.nodeTables.toSeq.map { case (label, df) =>
-      df.select(col(IdCol).as("nid"), lit(label).as("nlabel"))
+      df.select(col(IdCol).cast(StringType).as("nid"), lit(label).as("nlabel"))
     }.reduce(_ unionByName _)
       .withColumn("vid", monotonically_increasing_id())
       // pin: the id expression is partition-dependent; without the
@@ -48,6 +50,7 @@ object GraphAlgos {
       (r.getAs[VertexId]("vid"), (r.getAs[String]("nlabel"), r.getAs[String]("nid"))))
     val edges = rels.map { r =>
       g.edgeTables(r)
+        .select(col(SrcCol).cast(StringType).as(SrcCol), col(DstCol).cast(StringType).as(DstCol))
         .join(dict.select(col("nid").as(SrcCol), col("vid").as("svid")), Seq(SrcCol))
         .join(dict.select(col("nid").as(DstCol), col("vid").as("dvid")), Seq(DstCol))
         .select(col("svid"), col("dvid"))
@@ -57,6 +60,12 @@ object GraphAlgos {
       edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
       vertexStorageLevel = StorageLevel.MEMORY_AND_DISK), dict)
   }
+
+  /** `id` back in the graph's id type: vertex attrs carry ids as strings
+    * ([[toGraphX]]), results return them as the graph stores them.
+    */
+  private def typedId(g: PropertyGraph, df: DataFrame): DataFrame =
+    df.withColumn(IdCol, col(IdCol).cast(g.schema.idType))
 
   /** Materialize `out` (eager localCheckpoint) and release the GraphX
     * graphs that back it. GraphX pins vertex/edge RDDs at
@@ -106,10 +115,10 @@ object GraphAlgos {
       },
       math.min)
     import spark.implicits._
-    releasing(bfs.vertices
+    releasing(typedId(g, bfs.vertices
       .filter { case (_, (_, d)) => d != Int.MaxValue && d > 0 }
       .map { case (_, ((label, id), d)) => (label, id, d) }
-      .toDF("label", IdCol, "hops"), gx, init, bfs)
+      .toDF("label", IdCol, "hops")), gx, init, bfs)
   }
 
   /** UNDIRECTED hop distance (unit-weight SSSP) from `startId` over the
@@ -144,10 +153,10 @@ object GraphAlgos {
       },
       math.min)
     import spark.implicits._
-    releasing(bfs.vertices
+    releasing(typedId(g, bfs.vertices
       .filter { case (_, (_, d)) => d != Int.MaxValue }
       .map { case (_, ((label, id), d)) => (label, id, d) }
-      .toDF("label", IdCol, "hops"), gx, init, bfs)
+      .toDF("label", IdCol, "hops")), gx, init, bfs)
   }
 
   /** Bounded weighted single-source shortest paths over an explicit
@@ -376,15 +385,15 @@ object GraphAlgos {
       valueCol: String): DataFrame = {
     val spark = g.nodeTables.head._2.sparkSession
     import spark.implicits._
-    result.join(vertices)
+    typedId(g, result.join(vertices)
       .map { case (_, (v, (label, id))) => (label, id, v) }
-      .toDF("label", IdCol, valueCol)
+      .toDF("label", IdCol, valueCol))
   }
 
   /** Connected components over selected relations; returns (label, id,
     * component_id) where component_id is the MIN ORIGINAL node id in the
-    * component — deterministic and meaningful to callers, unlike the
-    * internal (run-dependent) vids.
+    * component, compared in the graph's id type — deterministic and
+    * meaningful to callers, unlike the internal (run-dependent) vids.
     */
   def connectedComponents(g: PropertyGraph, relations: Seq[String] = Seq.empty)
       : DataFrame = {

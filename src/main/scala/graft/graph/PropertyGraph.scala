@@ -406,20 +406,22 @@ final case class PropertyGraph(
     * reference's self-describing storage, where attribute keys carry
     * name+type (src/Edgy/Node.hs:151-169).
     *
-    * Edge tables are written hash-partitioned on `src` and sorted within
-    * partitions (SURVEY.md §2.4 100 TB posture): traversals join on `src`,
-    * so a src-clustered layout gives parquet row-group locality for point
-    * reads and lets a re-reader repartition-free when its partitioning
-    * matches. `edgeBuckets` sizes the layout (≈ cluster cores at scale;
-    * small for demo graphs).
+    * Every table is written key-clustered: hash-partitioned on its key
+    * (`src` for edge tables, `id` for node tables) and sorted within each
+    * file (SURVEY.md §2.4 100 TB posture). Traversals join edges on `src`
+    * and attributes on `id`; every key lives in exactly one file, in
+    * sorted row groups whose min/max statistics stay tight for key filters.
+    * The file count is not a parameter: the shuffle carries no partition
+    * count, so AQE coalescing sizes it from the data — one file per table
+    * for a demo graph, more as a table grows (with AQE off it falls back
+    * to `spark.sql.shuffle.partitions`).
     */
-  def save(dir: String, edgeBuckets: Int = 8): Unit = {
+  def save(dir: String): Unit = {
     PropertyGraph.writeSchemaManifest(spark, schema, dir)
     nodeTables.foreach { case (l, df) =>
-      df.write.mode("overwrite").parquet(s"$dir/nodes_$l.parquet") }
+      PropertyGraph.writeClustered(df, IdCol, s"$dir/nodes_$l.parquet") }
     edgeTables.foreach { case (r, df) =>
-      df.repartition(edgeBuckets, col(SrcCol)).sortWithinPartitions(col(SrcCol))
-        .write.mode("overwrite").parquet(s"$dir/edges_$r.parquet") }
+      PropertyGraph.writeClustered(df, SrcCol, s"$dir/edges_$r.parquet") }
   }
 
   /** Persist ONE relation's edge table into a directory previously written
@@ -430,11 +432,10 @@ final case class PropertyGraph(
     * the write because its own plan typically reads the very parquet
     * files being overwritten.
     */
-  def saveRelation(dir: String, relName: String, edgeBuckets: Int = 8): Unit = {
+  def saveRelation(dir: String, relName: String): Unit = {
     val stored = schema.relation(relName).rel.name
-    edgeTables(stored).localCheckpoint(true)
-      .repartition(edgeBuckets, col(SrcCol)).sortWithinPartitions(col(SrcCol))
-      .write.mode("overwrite").parquet(s"$dir/edges_$stored.parquet")
+    PropertyGraph.writeClustered(edgeTables(stored).localCheckpoint(true),
+      SrcCol, s"$dir/edges_$stored.parquet")
   }
 
   /** Persist as CATALOG-BUCKETED tables (`bucketBy(src)` + `sortBy`): unlike
@@ -524,12 +525,27 @@ object PropertyGraph {
     PropertyGraph(schema.validated(), nodes, edges)
   }
 
-  /** Load a graph previously written by `save`. */
-  def load(spark: SparkSession, schema: GraphSchema, dir: String): PropertyGraph =
+  /** The [[PropertyGraph.save]] layout: hash-partitioned on `key` with no
+    * partition count (AQE sizes the files), sorted by `key` in each file.
+    */
+  private def writeClustered(df: DataFrame, key: String, path: String): Unit =
+    df.repartition(col(key)).sortWithinPartitions(col(key))
+      .write.mode("overwrite").parquet(path)
+
+  /** Load a graph previously written by `save`. Each table is read with
+    * the schema's declared struct, so no parquet schema-inference job
+    * runs; a missing table directory still fails here, not as an empty
+    * table.
+    */
+  def load(spark: SparkSession, schema: GraphSchema, dir: String): PropertyGraph = {
+    def read(t: StructType, path: String) = spark.read.schema(t).parquet(path)
     PropertyGraph(
       schema.validated(),
-      schema.nodeDefs.map(d => d.label -> spark.read.parquet(s"$dir/nodes_${d.label}.parquet")).toMap,
-      schema.relationDefs.map(r => r.name -> spark.read.parquet(s"$dir/edges_${r.name}.parquet")).toMap)
+      schema.nodeDefs.map(d => d.label ->
+        read(d.structType(schema.idType), s"$dir/nodes_${d.label}.parquet")).toMap,
+      schema.relationDefs.map(r => r.name ->
+        read(edgeStructOf(schema.idType), s"$dir/edges_${r.name}.parquet")).toMap)
+  }
 
   /** Load a graph from a self-describing directory written by [[save]]:
     * the schema is reconstructed from the `_schema` manifest — no schema

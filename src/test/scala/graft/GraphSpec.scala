@@ -491,6 +491,88 @@ class GraphSpec extends SparkSpec {
       === Seq("Poker Chips"))
   }
 
+  test("load reads each table with its declared schema: one job; a missing table still fails") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-load").toString
+    g.save(dir)
+    val sc = spark.sparkContext
+    val (group, markerGroup) = ("graphspec-load", "graphspec-load-marker")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`)       => jobs.incrementAndGet()
+          case Some(`markerGroup`) => marker.countDown()
+          case _                   =>
+        }
+    }
+    sc.addSparkListener(listener)
+    val loaded =
+      try {
+        sc.setJobGroup(group, "load")
+        val l = try PropertyGraph.load(spark, dir) finally sc.clearJobGroup()
+        // the bus delivers events in order: once the marker job's start
+        // arrives, every job load started has been counted
+        sc.setJobGroup(markerGroup, "marker")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        l
+      } finally sc.removeSparkListener(listener)
+    assert(jobs.get() === 1, "only the _schema manifest read may start a job")
+    assert(names(DemoGraph.missingTools(loaded, "Bob")) === Seq("Poker Chips"))
+    // a declared schema must not turn a missing table into an empty one
+    val table = new java.io.File(s"$dir/edges_tool.parquet")
+    table.listFiles().foreach(_.delete())
+    assert(table.delete())
+    val err = intercept[org.apache.spark.sql.AnalysisException](PropertyGraph.load(spark, dir))
+    assert(err.getMessage.contains("edges_tool.parquet"))
+  }
+
+  test("GraphX algorithms on a long-keyed graph match the string-keyed run") {
+    import spark.implicits._
+    // long ids in the string ids' order, starting at 3 so the persons get
+    // 9 (bob), 10 (jane), 11 (jose): "10" < "9" as strings, so a component
+    // labelled by a string-compared min would name jane, not bob
+    val toLong: Map[String, Long] = g.nodeTables.values.toSeq
+      .flatMap(_.select("id").as[String].collect()).sorted.zipWithIndex
+      .map { case (id, i) => id -> (i + 3L) }.toMap
+    val toStr = toLong.map(_.swap)
+    val lid = udf((id: String) => toLong(id))
+    val lg = PropertyGraph(DemoGraph.schema.copy(idType = LongType),
+      g.nodeTables.map { case (l, df) => l -> df.withColumn("id", lid(col("id"))) },
+      g.edgeTables.map { case (r, df) =>
+        r -> df.select(lid(col("src")).as("src"), lid(col("dst")).as("dst")) })
+    // (label, id, value) rows keyed by the string id, whatever the id type
+    def rows(df: org.apache.spark.sql.DataFrame, long: Boolean): Map[String, (String, Any)] = {
+      assert(df.schema("id").dataType === (if (long) LongType else StringType))
+      df.collect().map { r =>
+        val id = if (long) toStr(r.getLong(1)) else r.getString(1)
+        val v = r.get(2) match {
+          case c: Long if long => toStr(c)
+          case other           => other
+        }
+        id -> (r.getString(0), v)
+      }.toMap
+    }
+    import graft.graph.GraphAlgos._
+    val cc = rows(connectedComponents(g, Seq("friend", "spouse")), long = false)
+    assert(cc("person:jane") === ("Person", "person:bob"))
+    assert(rows(connectedComponents(lg, Seq("friend", "spouse")), long = true) === cc)
+    // ranks agree up to float summation order (the vids differ)
+    val (prLong, prStr) = (rows(pageRank(lg), long = true), rows(pageRank(g), long = false))
+    assert(prLong.keySet === prStr.keySet)
+    prStr.foreach { case (id, (label, rank: Double)) =>
+      val (l, r) = prLong(id)
+      assert(l === label && math.abs(r.asInstanceOf[Double] - rank) < 1e-9, id)
+    }
+    val jane = toLong("person:jane").toString
+    assert(rows(relatedN(lg, "friend", jane, 2), long = true)
+      === rows(relatedN(g, "friend", "person:jane", 2), long = false))
+    val bob = toLong("person:bob").toString
+    assert(rows(hopDistance(lg, bob, 2), long = true)
+      === rows(hopDistance(g, "person:bob", 2), long = false))
+  }
+
   test("weightedDistance relaxes multi-edge paths and honors the superstep bound") {
     import spark.implicits._
     // a—b direct costs 10; the 2-edge detour a—c—b costs 3. One superstep
@@ -539,7 +621,31 @@ class GraphSpec extends SparkSpec {
 
   test("save clusters edges by src; bucketed tables self-join without shuffle") {
     val dir = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
-    g.save(dir, edgeBuckets = 2)
+    // tiny AQE partition targets, so even the demo graph spreads over
+    // several files and the per-file invariant below has something to hold
+    withConfs(
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1") {
+      g.save(dir)
+    }
+    // the layout contract: every key value lives in exactly one file of
+    // its table, and rows are sorted by the key inside each file
+    def keysPerFile(table: String, key: String): Seq[Seq[String]] =
+      new java.io.File(s"$dir/$table").listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .toSeq.map(f => spark.read.parquet(f.getPath).select(key)
+          .collect().map(_.getString(0)).toSeq)
+    val tables = DemoGraph.schema.nodeDefs.map(d => s"nodes_${d.label}.parquet" -> "id") ++
+      DemoGraph.schema.relationDefs.map(r => s"edges_${r.name}.parquet" -> "src")
+    for ((table, key) <- tables) {
+      val files = keysPerFile(table, key)
+      files.foreach(ks => assert(ks === ks.sorted, s"$table: a file is not sorted by $key"))
+      val distinctPerFile = files.flatMap(_.distinct)
+      assert(distinctPerFile.size === distinctPerFile.distinct.size,
+        s"$table: a $key value spans several files")
+    }
+    assert(keysPerFile("edges_possession.parquet", "src").size > 1,
+      "the small partition target should have forced several files")
     val reloaded = PropertyGraph.load(spark, DemoGraph.schema, dir)
     assert(reloaded.edges("possession").count() === g.edges("possession").count())
     assert(names(DemoGraph.missingTools(reloaded, "Bob")) === Seq("Poker Chips"))
