@@ -1,20 +1,43 @@
 package graft.graph
 
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.schema.GraphSchema.{DstCol, IdCol, SrcCol}
 
-/** GraphX analytics over a PropertyGraph (SURVEY.md §2 "multi-hop graph
-  * traversal at scale" + Phase 4): iterative algorithms — unbounded-depth
-  * reachability, connected components, PageRank, triangle counting — run as
-  * Pregel supersteps instead of self-join-per-hop Catalyst plans, which is
-  * the right engine once depth is unbounded (a k-hop join chain builds k
-  * shuffles and an exploding plan; Pregel reuses one partitioning across
-  * iterations).
+/** Graph analytics over a PropertyGraph (SURVEY.md §2 "multi-hop graph
+  * traversal at scale" + Phase 4), on one of two engines chosen from exact
+  * counts of the input.
+  *
+  * Driver-local snapshot (`connectedComponents`, `triangleCount`,
+  * `weightedDistance`, `pageRankFixedPoint`): when the node rows and the
+  * selected edges fit [[LocalMaxVerts]] / [[LocalMaxEdges]] and a bound of
+  * the driver heap they take fits Spark's user memory ([[SnapSize]]), one
+  * sizing job checks both before any row moves, one collect ships the graph
+  * as densely indexed primitive arrays (ids dictionary-encoded per
+  * partition, merged on the driver), a kernel runs over those arrays
+  * (union-find, sorted-merge triangles, bounded relaxation, the integer
+  * PageRank of [[pageRankFixedPointLong]]), and the result comes back
+  * through one broadcast and an eager localCheckpoint — three jobs where
+  * the distributed plans below spend 15-27 on a small graph. Each kernel
+  * mirrors its distributed path on dangling endpoints, duplicate edges,
+  * self-loops and null ids or weights (GraphSpec pins local ≡
+  * distributed).
+  *
+  * Distributed (past the caps, and for `relatedN`, `hopDistance`,
+  * `pageRank`): unbounded-depth reachability and components run as GraphX
+  * Pregel supersteps instead of self-join-per-hop Catalyst plans (a k-hop
+  * join chain builds k shuffles and an exploding plan; Pregel reuses one
+  * partitioning across iterations); triangles, bounded SSSP and the
+  * fixed-point PageRank run as DataFrame loops.
   *
   * Projection contract: string node ids get COLLISION-FREE VertexId longs
   * via a dictionary (`monotonically_increasing_id`), pinned with
@@ -68,7 +91,7 @@ object GraphAlgos {
     df.withColumn(IdCol, col(IdCol).cast(g.schema.idType))
 
   /** Materialize `out` (eager localCheckpoint) and release the GraphX
-    * graphs that back it. GraphX pins vertex/edge RDDs at
+    * graphs and the [[toGraphX]] dictionary that back it. GraphX pins vertex/edge RDDs at
     * MEMORY_AND_DISK and never frees them itself, so returning a lazy
     * DataFrame over a still-cached graph leaks a graph-sized
     * block-manager footprint per CALL — in a long-lived driver (a bench
@@ -78,10 +101,437 @@ object GraphAlgos {
     * materializes the (small) result rows first, so freeing the graphs
     * cannot trigger recompute.
     */
-  private def releasing(out: DataFrame, graphs: Graph[_, _]*): DataFrame = {
+  private def releasing(out: DataFrame, dict: DataFrame, graphs: Graph[_, _]*)
+      : DataFrame = {
     val pinned = out.localCheckpoint(true)
     graphs.foreach(_.unpersist(blocking = false))
+    freePinned(dict)
     pinned
+  }
+
+  // ---- driver-local snapshot ----------------------------------------
+
+  /** Most node rows and most selected edges a driver-local snapshot takes
+    * (for an edge list, whose vertices are its endpoints, the vertex cap
+    * bounds 2 × edges), and the caps of [[pageRankFixedPointLong]]'s
+    * long-keyed local path. Checked on exact counts before any row moves;
+    * past either cap the distributed plans run. The PageRank kernel over
+    * long arrays measured 6 s locally vs 58 s distributed at sf1 (7.5M
+    * edges). A snapshot must also fit the driver (see [[SnapSize]]), which
+    * for string ids binds well below these caps.
+    */
+  private[graft] val LocalMaxVerts = 4_000_000L
+  private[graft] val LocalMaxEdges = 16_000_000L
+
+  /** Exact sizes of a snapshot's input, from its sizing job: node rows,
+    * edges, non-null id references (2 per edge, 1 per node row) and their
+    * UTF-8 bytes.
+    *
+    * `heapBytes` bounds the driver heap a snapshot holds at its peak. Worst
+    * case, every id reference is a distinct id within its partition, so
+    * each partition dictionary ships its own String of it, and every
+    * partition is live at once — as collected bytes, decoded rows and
+    * [[SnapPart]] objects — while the merge fills the arrays and the
+    * global dictionary; a kernel's working arrays and the result's
+    * broadcast come on top. The per-row, per-reference and per-byte
+    * constants are empirical upper bounds: on string-keyed graphs with ids
+    * spread over 200 partitions, under `-Xmx3g` on local[4], the live heap
+    * after GC rose 759-902 MB above its baseline for 400k nodes / 1.5M
+    * edges of 36-char ids (each of the four kernels; bounds 1202-1392 MB),
+    * 884 MB for 600k / 2.5M edges of 6-digit ids (triangles; bound 1483
+    * MB) and 2755 MB for 1.6M / 6M edges of 36-char ids (triangles, bound
+    * 5570 MB; its heap reached 2998 of 3072 MB before a GC — the 16M edge
+    * cap alone does not keep a string-keyed snapshot inside such a
+    * driver). `resultBytes` bounds the bytes the collect ships, which
+    * `spark.driver.maxResultSize` counts: 21 B of arrays per row plus null
+    * bits, and each id reference's offset, padding and bytes.
+    */
+  private[graft] final case class SnapSize(nodeRows: Long, edges: Long, idRefs: Long,
+      idBytes: Long) {
+    def heapBytes: Long = 160L * (nodeRows + edges) + 160L * idRefs + 5L * idBytes
+    def resultBytes: Long = 24L * (nodeRows + edges) + 16L * idRefs + idBytes
+  }
+
+  /** A snapshot of `size` fits the driver when its heap bound stays within
+    * Spark's user memory — the heap outside `spark.memory.fraction`, after
+    * the 300 MB Spark reserves — and its collected bytes within half of
+    * `spark.driver.maxResultSize` (0 = unlimited).
+    */
+  private[graft] def fitsDriver(spark: SparkSession, size: SnapSize): Boolean = {
+    val conf = spark.sparkContext.getConf
+    val userMemory = ((Runtime.getRuntime.maxMemory - (300L << 20)) *
+      (1.0 - conf.getDouble("spark.memory.fraction", 0.6))).toLong
+    val maxResult = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    size.heapBytes <= userMemory && (maxResult == 0 || size.resultBytes <= maxResult / 2)
+  }
+
+  /** Id types the snapshot kernels order and compare exactly: the ids
+    * travel as strings (as in [[toGraphX]]) and come back cast.
+    */
+  private def snapshotIdType(dt: DataType): Boolean =
+    dt == StringType || dt == LongType || dt == IntegerType
+
+  /** One snapshot input row: a node row (`kind` = its label's index, `a`
+    * = its id) or an edge (`kind` = -1, endpoints `a`/`b`, weight `w`;
+    * `aStart`/`bStart` mark an endpoint equal to the relaxation start,
+    * compared by Spark in the column's own type).
+    */
+  private[graph] final case class SnapRow(kind: Int, a: String, b: String,
+      w: java.lang.Double, aStart: Boolean, bStart: Boolean)
+
+  private def snapCols(kind: Int, a: Column, b: Column,
+      w: Column = lit(null), aStart: Column = lit(false),
+      bStart: Column = lit(false)): Seq[Column] =
+    Seq(lit(kind).as("kind"), a.cast(StringType).as("a"),
+      b.cast(StringType).as("b"), w.cast(DoubleType).as("w"),
+      aStart.as("aStart"), bStart.as("bStart"))
+
+  /** One partition's rows packed as primitive arrays, ids encoded against
+    * the partition's own dictionary `ids` (-1 = null), so each distinct id
+    * crosses to the driver once per partition, not once per row.
+    */
+  private[graph] final case class SnapPart(ids: Array[String],
+      kind: Array[Int], a: Array[Int], b: Array[Int], w: Array[Double],
+      wNull: Array[Boolean], start: Int)
+
+  /** Insertion-ordered string → dense index dictionary (null → -1). */
+  private final class IdDict {
+    private val index = new java.util.HashMap[String, Integer]
+    private val ids = Array.newBuilder[String]
+    def apply(id: String): Int =
+      if (id == null) -1
+      else {
+        val k = index.get(id)
+        if (k != null) k.intValue
+        else { val i = index.size; index.put(id, i); ids += id; i }
+      }
+    def result(): Array[String] = ids.result()
+  }
+
+  private def pack(rows: Iterator[SnapRow]): SnapPart = {
+    val dict = new IdDict
+    val kind, a, b = Array.newBuilder[Int]
+    val w = Array.newBuilder[Double]
+    val wNull = Array.newBuilder[Boolean]
+    var start = -1
+    rows.foreach { r =>
+      val ia = dict(r.a); val ib = dict(r.b)
+      kind += r.kind; a += ia; b += ib
+      wNull += r.w == null
+      w += (if (r.w == null) 0.0 else r.w.doubleValue)
+      if (start < 0) start = if (r.aStart) ia else if (r.bStart) ib else -1
+    }
+    SnapPart(dict.result(), kind.result(), a.result(), b.result(),
+      w.result(), wNull.result(), start)
+  }
+
+  /** The graph on the driver: `ids` is the dense id dictionary; node row i
+    * is labelled `labels(nodeLabel(i))` with id index `nodeId(i)`; edge e
+    * joins `src(e)`–`dst(e)` at `weight(e)` (SQL null where
+    * `weightNull(e)`); id index -1 is a null id; `start` is the id index
+    * flagged as the relaxation start (-1 = none).
+    */
+  private final class Snapshot(val labels: Array[String], val ids: Array[String],
+      val nodeLabel: Array[Int], val nodeId: Array[Int],
+      val src: Array[Int], val dst: Array[Int],
+      val weight: Array[Double], val weightNull: Array[Boolean], val start: Int)
+
+  /** Size `rows` (one job, see [[SnapSize]]), and when `fits(nodeRows,
+    * edges)` holds and the snapshot fits the driver, collect them (one job)
+    * and merge the partitions' dictionaries into one [[Snapshot]].
+    */
+  private def snapshot(rows: DataFrame, labels: Array[String],
+      fits: (Long, Long) => Boolean): Option[Snapshot] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    def bytes(c: String) = coalesce(octet_length(col(c)), lit(0))
+    def refs(c: String) = col(c).isNotNull.cast(IntegerType)
+    val size = rows.select(col("kind"), refs("a") + refs("b"), bytes("a") + bytes("b"))
+      .as[(Int, Int, Int)].mapPartitions { it =>
+        var n, m, r, b = 0L
+        it.foreach { case (k, ri, bi) =>
+          if (k >= 0) n += 1 else m += 1
+          r += ri; b += bi
+        }
+        Iterator((n, m, r, b))
+      }.collect()
+      .foldLeft(SnapSize(0, 0, 0, 0)) { case (t, (n, m, r, b)) =>
+        SnapSize(t.nodeRows + n, t.edges + m, t.idRefs + r, t.idBytes + b) }
+    if (!fits(size.nodeRows, size.edges) || !fitsDriver(spark, size)) return None
+    val parts = rows.as[SnapRow].mapPartitions(it => Iterator(pack(it))).collect()
+    val dict = new IdDict
+    val nodeLabel, nodeId = new Array[Int](size.nodeRows.toInt)
+    val src, dst = new Array[Int](size.edges.toInt)
+    val weight = new Array[Double](size.edges.toInt)
+    val weightNull = new Array[Boolean](size.edges.toInt)
+    var n, m = 0
+    var start = -1
+    parts.foreach { p =>
+      val global = p.ids.map(dict(_))
+      def id(i: Int) = if (i < 0) -1 else global(i)
+      var r = 0
+      while (r < p.kind.length) {
+        if (p.kind(r) >= 0) { nodeLabel(n) = p.kind(r); nodeId(n) = id(p.a(r)); n += 1 }
+        else {
+          src(m) = id(p.a(r)); dst(m) = id(p.b(r))
+          weight(m) = p.w(r); weightNull(m) = p.wNull(r)
+          m += 1
+        }
+        r += 1
+      }
+      if (start < 0) start = id(p.start)
+    }
+    Some(new Snapshot(labels, dict.result(), nodeLabel, nodeId, src, dst, weight,
+      weightNull, start))
+  }
+
+  /** Snapshot of `g`'s node rows and the edges of `relations` (all when
+    * empty), or None past `maxVerts` node rows or `maxEdges` edges.
+    */
+  private def graphSnapshot(g: PropertyGraph, relations: Seq[String],
+      maxVerts: Long = LocalMaxVerts, maxEdges: Long = LocalMaxEdges): Option[Snapshot] =
+    if (!snapshotIdType(g.schema.idType)) None
+    else {
+      val rels = if (relations.isEmpty) g.schema.relationDefs.map(_.name) else relations
+      val labels = g.nodeTables.keys.toArray
+      val nodes = labels.zipWithIndex.map { case (l, k) =>
+        g.nodeTables(l).select(snapCols(k, col(IdCol), lit(null)): _*) }
+      val edges = rels.map(r =>
+        g.edgeTables(r).select(snapCols(-1, col(SrcCol), col(DstCol)): _*))
+      snapshot((nodes ++ edges).reduce(_ unionByName _), labels,
+        (n, m) => n <= maxVerts && m <= maxEdges)
+    }
+
+  /** A driver-computed result as a DataFrame: `data` goes out as ONE
+    * broadcast, `spark.range(n)` maps each index to its row, `shape`
+    * names and casts the columns, and the eager localCheckpoint lets the
+    * broadcast be destroyed here — left lazy, the closure would pin the
+    * arrays (and their broadcast block copies) for the result's lifetime,
+    * a residue measured billing the NEXT query (+0.6 s on g09 after g06).
+    * Not a LocalRelation (re-encodes the rows on the driver and ships them
+    * inside every downstream task binary) and not parallelize (serializes
+    * the rows from the driver per execution). The result is the one pin
+    * left behind.
+    */
+  private def fromDriver[B: ClassTag, R <: Product : TypeTag](spark: SparkSession,
+      n: Int, data: B)(row: (B, Int) => R)(shape: DataFrame => DataFrame)
+      : DataFrame = {
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(data)
+    val out = shape(spark.range(n).map(i => row(bc.value, i.intValue)).toDF())
+      .localCheckpoint(true)
+    bc.destroy()
+    out
+  }
+
+  /** A per-node-row snapshot result as (label, id, `valueCol`), the id
+    * (and the value, when `valueIsId`) back in the graph's id type.
+    */
+  private def nodeResult[V: ClassTag : TypeTag](g: PropertyGraph, s: Snapshot,
+      valueCol: String, values: Array[V], valueIsId: Boolean = false): DataFrame = {
+    val idType = g.schema.idType
+    val spark = g.nodeTables.head._2.sparkSession
+    fromDriver(spark, s.nodeId.length, (s.labels, s.ids, s.nodeLabel, s.nodeId, values)) {
+      case ((labels, ids, nodeLabel, nodeId, v), i) =>
+        (labels(nodeLabel(i)), if (nodeId(i) < 0) null else ids(nodeId(i)), v(i))
+    } { df =>
+      val out = df.toDF("label", IdCol, valueCol).withColumn(IdCol, col(IdCol).cast(idType))
+      if (valueIsId) out.withColumn(valueCol, col(valueCol).cast(idType)) else out
+    }
+  }
+
+  /** `i` sorts before `j` the way Spark's `min` orders `idType`: UTF-8
+    * byte order for strings (Java's UTF-16 `compareTo` disagrees past the
+    * BMP), numeric order for integral ids.
+    */
+  private def idLess(ids: Array[String], idType: DataType): (Int, Int) => Boolean =
+    if (idType == StringType) {
+      val u = ids.map(UTF8String.fromString)
+      (i, j) => u(i).compareTo(u(j)) < 0
+    } else {
+      val l = ids.map(_.toLong)
+      (i, j) => l(i) < l(j)
+    }
+
+  /** Connected components over the snapshot's node ids — union-find.
+    * Edges with a null endpoint or one that is no node id drop out, as in
+    * the [[toGraphX]] joins; node rows sharing an id share its component.
+    * Returns, per node row, the id index of its component's minimum id
+    * under `idLess`, or -1 for a null id (a singleton whose min is null).
+    */
+  private def componentsLocal(s: Snapshot, idType: DataType): Array[Int] = {
+    val n = s.ids.length
+    val isNode = new Array[Boolean](n)
+    s.nodeId.foreach(i => if (i >= 0) isNode(i) = true)
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    var e = 0
+    while (e < s.src.length) {
+      val a = s.src(e); val b = s.dst(e)
+      if (a >= 0 && b >= 0 && isNode(a) && isNode(b)) parent(find(a)) = find(b)
+      e += 1
+    }
+    val less = idLess(s.ids, idType)
+    val minOf = Array.fill(n)(-1)
+    var i = 0
+    while (i < n) {
+      if (isNode(i)) {
+        val r = find(i)
+        if (minOf(r) < 0 || less(i, minOf(r))) minOf(r) = i
+      }
+      i += 1
+    }
+    s.nodeId.map(i => if (i < 0) -1 else minOf(find(i)))
+  }
+
+  /** Triangles per id index: [[triangleCountEdges]] on arrays. The edges
+    * form one simple undirected graph — self-loops and null endpoints
+    * drop, duplicates in either orientation collapse, dangling endpoints
+    * stay vertices. Each edge is oriented toward its higher-(degree,
+    * index) end, and for each oriented edge (s, t) a merge of the two
+    * sorted out-lists finds the closers w: the count is credited to s and
+    * to t, and 1 to each w, so every triangle reaches all three corners.
+    */
+  private def trianglesLocal(s: Snapshot): Array[Long] = {
+    val n = s.ids.length
+    val packed = Array.newBuilder[Long]
+    var e = 0
+    while (e < s.src.length) {
+      val a = s.src(e); val b = s.dst(e)
+      if (a >= 0 && b >= 0 && a != b)
+        packed += (math.min(a, b).toLong << 32) | math.max(a, b)
+      e += 1
+    }
+    val canon = packed.result()
+    java.util.Arrays.sort(canon)
+    var m = 0
+    e = 0
+    while (e < canon.length) {
+      if (m == 0 || canon(m - 1) != canon(e)) { canon(m) = canon(e); m += 1 }
+      e += 1
+    }
+    val deg = new Array[Int](n)
+    e = 0
+    while (e < m) { deg((canon(e) >>> 32).toInt) += 1; deg(canon(e).toInt) += 1; e += 1 }
+    def lower(u: Int, v: Int) = deg(u) < deg(v) || (deg(u) == deg(v) && u < v)
+    def tail(e: Int) = {
+      val u = (canon(e) >>> 32).toInt; val v = canon(e).toInt
+      if (lower(u, v)) u else v
+    }
+    val off = new Array[Int](n + 1)
+    e = 0
+    while (e < m) { off(tail(e) + 1) += 1; e += 1 }
+    var v = 0
+    while (v < n) { off(v + 1) += off(v); v += 1 }
+    val nbr = new Array[Int](m)
+    val fill = java.util.Arrays.copyOf(off, n)
+    e = 0
+    while (e < m) {
+      val u = (canon(e) >>> 32).toInt; val w = canon(e).toInt
+      val t = tail(e)
+      nbr(fill(t)) = if (t == u) w else u
+      fill(t) += 1
+      e += 1
+    }
+    v = 0
+    while (v < n) { java.util.Arrays.sort(nbr, off(v), off(v + 1)); v += 1 }
+    val tri = new Array[Long](n)
+    v = 0
+    while (v < n) {
+      var k = off(v)
+      while (k < off(v + 1)) {
+        val t = nbr(k)
+        var i = off(v); var j = off(t); var c = 0L
+        while (i < off(v + 1) && j < off(t + 1)) {
+          if (nbr(i) < nbr(j)) i += 1
+          else if (nbr(i) > nbr(j)) j += 1
+          else { tri(nbr(i)) += 1; c += 1; i += 1; j += 1 }
+        }
+        tri(v) += c; tri(t) += c
+        k += 1
+      }
+      v += 1
+    }
+    tri
+  }
+
+  private final val Unreached: Byte = 0
+  private final val ReachedNull: Byte = 1 // at a SQL-null distance
+  private final val Reached: Byte = 2
+
+  /** Bounded undirected relaxation from `s.start`, replaying the
+    * distributed loop of [[weightedDistanceLong]] round for round,
+    * including its SQL semantics: a candidate through a null weight or a
+    * null-distance vertex is null, a vertex's message is the min of its
+    * non-null candidates (null when all are null), min and `<` order NaN
+    * above every number, and a vertex whose distance is null counts as
+    * improved by any message. Edges with a null endpoint drop out.
+    * Returns, per id index, a reach state and the distance when it is
+    * `Reached`.
+    */
+  private def relaxLocal(s: Snapshot, maxIters: Int): (Array[Byte], Array[Double]) = {
+    val n = s.ids.length
+    val off = new Array[Int](n + 1)
+    var e = 0
+    while (e < s.src.length) {
+      if (s.src(e) >= 0 && s.dst(e) >= 0) { off(s.src(e) + 1) += 1; off(s.dst(e) + 1) += 1 }
+      e += 1
+    }
+    var v = 0
+    while (v < n) { off(v + 1) += off(v); v += 1 }
+    val nbr = new Array[Int](off(n))
+    val w = new Array[Double](off(n))
+    val wNull = new Array[Boolean](off(n))
+    val fill = java.util.Arrays.copyOf(off, n)
+    def add(from: Int, to: Int, e: Int): Unit = {
+      val k = fill(from)
+      nbr(k) = to; w(k) = s.weight(e); wNull(k) = s.weightNull(e)
+      fill(from) += 1
+    }
+    e = 0
+    while (e < s.src.length) {
+      if (s.src(e) >= 0 && s.dst(e) >= 0) { add(s.src(e), s.dst(e), e); add(s.dst(e), s.src(e), e) }
+      e += 1
+    }
+    def less(x: Double, y: Double) = SQLOrderingUtil.compareDoubles(x, y) < 0
+    val state = new Array[Byte](n)
+    val dist = new Array[Double](n)
+    val msgState = new Array[Byte](n)
+    val msg = new Array[Double](n)
+    state(s.start) = Reached
+    var frontier = Array(s.start)
+    var round = 0
+    while (round < maxIters && frontier.nonEmpty) {
+      // candidates from round-start distances: improvements land after
+      // every frontier vertex has sent, as in one distributed round
+      val touched = Array.newBuilder[Int]
+      frontier.foreach { u =>
+        var k = off(u)
+        while (k < off(u + 1)) {
+          val t = nbr(k)
+          if (msgState(t) == Unreached) { msgState(t) = ReachedNull; touched += t }
+          if (state(u) == Reached && !wNull(k)) {
+            val c = dist(u) + w(k)
+            if (msgState(t) != Reached || less(c, msg(t))) { msg(t) = c; msgState(t) = Reached }
+          }
+          k += 1
+        }
+      }
+      val next = Array.newBuilder[Int]
+      touched.result().foreach { t =>
+        if (state(t) != Reached || (msgState(t) == Reached && less(msg(t), dist(t)))) {
+          state(t) = msgState(t); dist(t) = msg(t); next += t
+        }
+        msgState(t) = Unreached
+      }
+      frontier = next.result()
+      round += 1
+    }
+    (state, dist)
   }
 
   /** All nodes within `depth` hops of `startId` following `relation`
@@ -118,7 +568,7 @@ object GraphAlgos {
     releasing(typedId(g, bfs.vertices
       .filter { case (_, (_, d)) => d != Int.MaxValue && d > 0 }
       .map { case (_, ((label, id), d)) => (label, id, d) }
-      .toDF("label", IdCol, "hops")), gx, init, bfs)
+      .toDF("label", IdCol, "hops")), dict, gx, init, bfs)
   }
 
   /** UNDIRECTED hop distance (unit-weight SSSP) from `startId` over the
@@ -156,7 +606,7 @@ object GraphAlgos {
     releasing(typedId(g, bfs.vertices
       .filter { case (_, (_, d)) => d != Int.MaxValue }
       .map { case (_, ((label, id), d)) => (label, id, d) }
-      .toDF("label", IdCol, "hops")), gx, init, bfs)
+      .toDF("label", IdCol, "hops")), dict, gx, init, bfs)
   }
 
   /** Bounded weighted single-source shortest paths over an explicit
@@ -171,10 +621,40 @@ object GraphAlgos {
     * double per vertex. Bounding the supersteps (rather than running to
     * fixpoint) both caps the cost on high-diameter graphs and makes the
     * result replayable by a bounded recursive-CTE oracle (g10), the same
-    * contract as the BFS layers (g07).
+    * contract as the BFS layers (g07). An edge list within the snapshot
+    * caps relaxes on the driver instead, round for round the same.
     */
   def weightedDistance(edges: DataFrame, startId: String, maxIters: Int)
       : DataFrame = {
+    val idType = edges.schema("src").dataType
+    val local =
+      if (!snapshotIdType(idType) || edges.schema("dst").dataType != idType) None
+      else snapshot(edges.select(snapCols(-1, col("src"), col("dst"), col("weight"),
+          coalesce(col("src") === startId, lit(false)),
+          coalesce(col("dst") === startId, lit(false))): _*),
+        Array.empty, (_, m) => 2 * m <= LocalMaxVerts && m <= LocalMaxEdges)
+    local match {
+      case Some(s) =>
+        if (s.start < 0) throw unknownStart(startId)
+        val (state, dist) = relaxLocal(s, maxIters)
+        val reached = Array.range(0, state.length).filter(state(_) != Unreached)
+        fromDriver(edges.sparkSession, reached.length, (s.ids, reached, state, dist)) {
+          case ((ids, reached, state, dist), i) =>
+            val v = reached(i)
+            (ids(v), if (state(v) == Reached) java.lang.Double.valueOf(dist(v)) else null)
+        }(_.toDF(IdCol, "dist").withColumn(IdCol, col(IdCol).cast(idType)))
+      case None => weightedDistanceDistributed(edges, startId, maxIters)
+    }
+  }
+
+  private def unknownStart(startId: String) = new IllegalArgumentException(
+    s"weightedDistance: unknown start node '$startId'")
+
+  /** [[weightedDistance]]'s distributed path: a pinned vid dictionary and
+    * the [[weightedDistanceLong]] loop over the encoded edges.
+    */
+  private[graft] def weightedDistanceDistributed(edges: DataFrame, startId: String,
+      maxIters: Int): DataFrame = {
     val dict = edges.select(col("src").as("nid"))
       .unionByName(edges.select(col("dst").as("nid")))
       .distinct()
@@ -182,16 +662,18 @@ object GraphAlgos {
       .localCheckpoint(true)
     val start = dict.where(col("nid") === startId)
       .select(col("vid")).collect().headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"weightedDistance: unknown start node '$startId'"))
+      .getOrElse { freePinned(dict); throw unknownStart(startId) }
       .getLong(0)
     val enc = edges
       .join(dict.select(col("nid").as("src"), col("vid").as("svid")), Seq("src"))
       .join(dict.select(col("nid").as("dst"), col("vid").as("dvid")), Seq("dst"))
       .select(col("svid").as("src"), col("dvid").as("dst"), col("weight"))
-    weightedDistanceLong(enc, start, maxIters)
-      .join(dict, Seq("vid"))
+    val dist = weightedDistanceLong(enc, start, maxIters)
+    val out = dist.join(dict, Seq("vid"))
       .select(col("nid").as(IdCol), col("dist"))
+      .localCheckpoint(true)
+    Seq(dist, dict).foreach(freePinned)
+    out
   }
 
   /** Largest frontier (rows) the SSSP relaxation broadcasts: a frontier
@@ -265,6 +747,9 @@ object GraphAlgos {
             improved += to
           }
         }
+      // a null or NaN weight: the distributed loop's SQL null and NaN
+      // ordering decide those rounds, so it runs them
+      if (slice.exists(r => r.isNullAt(2) || r.getDouble(2).isNaN)) return None
       slice.foreach { r =>
         val s = r.getLong(0); val d = r.getLong(1); val w = r.getDouble(2)
         relax(s, d, w) // stored direction
@@ -396,23 +881,36 @@ object GraphAlgos {
     * meaningful to callers, unlike the internal (run-dependent) vids.
     */
   def connectedComponents(g: PropertyGraph, relations: Seq[String] = Seq.empty)
-      : DataFrame = {
-    val (gx, _) = toGraphX(g, relations)
+      : DataFrame =
+    graphSnapshot(g, relations) match {
+      case Some(s) =>
+        val comp = componentsLocal(s, g.schema.idType)
+        nodeResult(g, s, "component_id",
+          comp.map(c => if (c < 0) null else s.ids(c)), valueIsId = true)
+      case None => connectedComponentsDistributed(g, relations)
+    }
+
+  /** [[connectedComponents]]'s distributed path: GraphX components over
+    * [[toGraphX]], each component named by its minimum id.
+    */
+  private[graft] def connectedComponentsDistributed(g: PropertyGraph,
+      relations: Seq[String]): DataFrame = {
+    val (gx, dict) = toGraphX(g, relations)
     val ccGraph = gx.connectedComponents()
     val comps = attachAttrs(g, ccGraph.vertices, gx.vertices, "comp")
     val names = comps.groupBy(col("comp"))
       .agg(min(col(IdCol)).as("component_id"))
     releasing(
       comps.join(names, "comp").select(col("label"), col(IdCol), col("component_id")),
-      gx, ccGraph)
+      dict, gx, ccGraph)
   }
 
   /** PageRank; returns (label, id, rank). */
   def pageRank(g: PropertyGraph, tol: Double = 1e-4,
       relations: Seq[String] = Seq.empty): DataFrame = {
-    val (gx, _) = toGraphX(g, relations)
+    val (gx, dict) = toGraphX(g, relations)
     val pr = gx.pageRank(tol)
-    releasing(attachAttrs(g, pr.vertices, gx.vertices, "rank"), gx, pr)
+    releasing(attachAttrs(g, pr.vertices, gx.vertices, "rank"), dict, gx, pr)
   }
 
   /** FIXED-POINT static PageRank: ranks are Longs in 1/`scale` units,
@@ -448,24 +946,6 @@ object GraphAlgos {
     */
   private[graft] val PageRankBroadcastMaxVerts = 8_000_000L
 
-  /** Largest long-encoded edge list / vertex set the PageRank fixed
-    * point iterates DRIVER-LOCALLY (the g10 localRelax precedent): the
-    * iteration working set for a bounded graph is the whole (already
-    * dictionary-encoded) edge list — 16M (src, dst) long pairs ≈ 256 MB
-    * collected once — and 25 exact integer iterations over primitive
-    * arrays cost ~1s where each distributed iteration pays a broadcast
-    * build + a multi-stage job (measured at sf1, 7.5M edges: 58s
-    * distributed-DF, 81s the round-14 RDD joins, 6s local — DuckDB's
-    * in-process recursive CTE needs 17s). Both caps are enforced on
-    * EXACT checkpointed counts; past either, the DataFrame loop below
-    * runs — at 100 TB vertex/edge sets blow the caps and the broadcast
-    * (or shuffle) plan takes over. GraphSpec pins local ≡ distributed
-    * bit-exactly (the integer arithmetic makes the law exact, not
-    * approximate).
-    */
-  private[graft] val PageRankLocalMaxEdges = 16_000_000L
-  private[graft] val PageRankLocalMaxVerts = 4_000_000L
-
   /** Open-addressing long→int map (linear probe, power-of-two table) —
     * the driver-local graph kernels remap sparse vids to dense indices
     * over MILLIONS of keys, where java.util.HashMap's per-entry boxing
@@ -498,34 +978,19 @@ object GraphAlgos {
     }
   }
 
-  /** Driver-local exact-integer PageRank over the collected long-keyed
-    * vertex + edge arrays — primitive end to end, identical truncating
-    * arithmetic to the distributed loop (bit-exact by the GraphSpec
-    * law). Bounded by the caller's caps BEFORE anything is collected.
-    * Returns the rank array aligned with `verts` — or null when an edge
-    * endpoint is absent from `verts` (dangling edge): the distributed
-    * loop tolerates that input (dangling dst drops out of the left
-    * join; dangling src contributes nothing), so the caller bails to it
-    * rather than diverging local vs distributed semantics.
+  /** Driver-local exact-integer PageRank over `n` densely indexed
+    * vertices and the directed edges `src(e)` → `dst(e)` — primitive end
+    * to end, identical truncating arithmetic to the distributed loop
+    * (bit-exact by the GraphSpec law); duplicate edges and self-loops
+    * count as they do there. Bounded by the caller's caps BEFORE anything
+    * is collected. Returns the rank per vertex index.
     */
-  private def pageRankLocal(verts: Array[Long], srcs: Array[Long],
-      dsts: Array[Long], iters: Int, scale: Long, baseRank: Long)
-      : Array[Long] = {
-    val n = verts.length
-    val idx = new LongIntMap(n)
-    var i = 0
-    while (i < n) { idx.put(verts(i), i); i += 1 }
-    val m = srcs.length
-    val src = new Array[Int](m); val dst = new Array[Int](m)
-    i = 0
-    while (i < m) {
-      src(i) = idx.get(srcs(i))
-      dst(i) = idx.get(dsts(i))
-      if (src(i) < 0 || dst(i) < 0) return null // dangling edge → bail
-      i += 1
-    }
+  private def pageRankLocal(n: Int, src: Array[Int], dst: Array[Int],
+      iters: Int, scale: Long, baseRank: Long): Array[Long] = {
+    val m = src.length
     val deg = new Array[Long](n)
-    i = 0; while (i < m) { deg(src(i)) += 1L; i += 1 }
+    var i = 0
+    while (i < m) { deg(src(i)) += 1L; i += 1 }
     val rank = Array.fill(n)(scale)
     val contrib = new Array[Long](n)
     val acc = new Array[Long](n)
@@ -556,8 +1021,8 @@ object GraphAlgos {
     */
   def pageRankFixedPointLong(verts: DataFrame, edges: DataFrame, iters: Int,
       scale: Long = 1000000000L,
-      localMaxEdges: Long = PageRankLocalMaxEdges,
-      localMaxVerts: Long = PageRankLocalMaxVerts): DataFrame = {
+      localMaxEdges: Long = LocalMaxEdges,
+      localMaxVerts: Long = LocalMaxVerts): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     val spark = verts.sparkSession
     import spark.implicits._
@@ -578,32 +1043,20 @@ object GraphAlgos {
       val sArr = ee.select(col("src")).as[Long].collect()
       val dArr = ee.select(col("dst")).as[Long].collect()
       assert(sArr.length == dArr.length)
-      val rank = pageRankLocal(vArr, sArr, dArr, iters, scale, baseRank)
-      if (rank != null) {
+      val idx = new LongIntMap(vArr.length)
+      vArr.indices.foreach(i => idx.put(vArr(i), i))
+      val src = sArr.map(idx.get)
+      val dst = dArr.map(idx.get)
+      // a dangling edge (endpoint absent from verts): the joins below
+      // tolerate exactly that input, so fall through to them — vv/ee pins
+      // stay live for the distributed loop
+      if (!src.exists(_ < 0) && !dst.exists(_ < 0)) {
+        val rank = pageRankLocal(vArr.length, src, dst, iters, scale, baseRank)
         Seq(vv, ee).foreach(freePinned)
-        // result via broadcast arrays + a distributed index map — not a
-        // LocalRelation (re-encodes vertex-sized rows on the driver and
-        // ships them inside every downstream task binary) and not
-        // parallelize (serializes the rows from the driver per execution).
-        // Checkpointed EAGERLY so the broadcasts can be destroyed right
-        // here: left lazy, the closure pins both arrays (plus their
-        // broadcast block copies) for the result's lifetime, and that
-        // lingering state bills the NEXT query — the round-15 committed
-        // pairs charged g09 +0.6s for g06's residue (6.25s vs 4.78s
-        // isolated in the tight g-block A/B; the canon.count() probe
-        // itself measured free).
-        val bcV = spark.sparkContext.broadcast(vArr)
-        val bcR = spark.sparkContext.broadcast(rank)
-        val localOut = spark.range(vArr.length)
-          .map(i => (bcV.value(i.toInt), bcR.value(i.toInt)))
-          .toDF("vid", "rank_nano")
-          .localCheckpoint(true)
-        bcV.destroy(); bcR.destroy()
-        return localOut
+        return fromDriver(spark, vArr.length, (vArr, rank)) {
+          case ((v, r), i) => (v(i), r(i))
+        }(_.toDF("vid", "rank_nano"))
       }
-      // null = dangling edge (endpoint absent from verts). The joins
-      // below tolerate exactly that input, so fall through — vv/ee pins
-      // stay live for the distributed loop.
     }
     val degD = ee.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .localCheckpoint(true) // vertex-sized, consumed every iteration
@@ -636,9 +1089,45 @@ object GraphAlgos {
 
   def pageRankFixedPoint(g: PropertyGraph, iters: Int = 25,
       relations: Seq[String] = Seq.empty, scale: Long = 1000000000L,
-      localMaxEdges: Long = PageRankLocalMaxEdges,
-      localMaxVerts: Long = PageRankLocalMaxVerts): DataFrame = {
+      localMaxEdges: Long = LocalMaxEdges,
+      localMaxVerts: Long = LocalMaxVerts): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
+    val local = graphSnapshot(g, relations, localMaxVerts, localMaxEdges)
+      .flatMap(s => pageRankSnapshot(s, iters, scale).map(s -> _))
+    local.fold(pageRankDistributed(g, iters, relations, scale, localMaxEdges,
+      localMaxVerts)) { case (s, rank) => nodeResult(g, s, "rank_nano", rank) }
+  }
+
+  /** [[pageRankLocal]] over a snapshot's node rows, or None when two node
+    * rows share an id: the distributed dictionary numbers them as two
+    * vertices and joins every edge to both, which this kernel does not
+    * replicate. Edges with a null endpoint or one that is no node id drop
+    * out, as in the dictionary joins.
+    */
+  private def pageRankSnapshot(s: Snapshot, iters: Int, scale: Long)
+      : Option[Array[Long]] = {
+    val rowOf = Array.fill(s.ids.length)(-1)
+    var r = 0
+    while (r < s.nodeId.length) {
+      val id = s.nodeId(r)
+      if (id >= 0) { if (rowOf(id) >= 0) return None; rowOf(id) = r }
+      r += 1
+    }
+    def row(id: Int) = if (id < 0) -1 else rowOf(id)
+    val src, dst = Array.newBuilder[Int]
+    var e = 0
+    while (e < s.src.length) {
+      val a = row(s.src(e)); val b = row(s.dst(e))
+      if (a >= 0 && b >= 0) { src += a; dst += b }
+      e += 1
+    }
+    Some(pageRankLocal(s.nodeId.length, src.result(), dst.result(), iters, scale,
+      (15L * scale) / 100L))
+  }
+
+  private def pageRankDistributed(g: PropertyGraph, iters: Int,
+      relations: Seq[String], scale: Long, localMaxEdges: Long,
+      localMaxVerts: Long): DataFrame = {
     // DataFrame loop, not RDD joins (round 15): the RDD formulation
     // shuffled 7.5M boxed tuples per iteration through Java-object
     // serde — measured 81s for 25 iterations at sf1. Codegen'd long
@@ -682,9 +1171,22 @@ object GraphAlgos {
     * endpoint, which bounds out-degrees by O(√m), so the wedge self-join
     * generates O(m^1.5) candidates worst-case instead of Σ deg² around
     * hubs. Each triangle is found exactly once (at its lowest-order
-    * vertex) and credited to all three corners.
+    * vertex) and credited to all three corners. A graph within the
+    * snapshot caps runs the same algorithm on driver arrays.
     */
   def triangleCount(g: PropertyGraph, relations: Seq[String] = Seq.empty)
+      : DataFrame =
+    graphSnapshot(g, relations) match {
+      case Some(s) =>
+        val tri = trianglesLocal(s)
+        nodeResult(g, s, "triangles", s.nodeId.map(i => if (i < 0) 0 else tri(i).toInt))
+      case None => triangleCountDistributed(g, relations)
+    }
+
+  /** [[triangleCount]]'s distributed path: [[triangleCountEdges]] over a
+    * vid dictionary of the node ids and the relations' endpoints.
+    */
+  private[graft] def triangleCountDistributed(g: PropertyGraph, relations: Seq[String])
       : DataFrame = {
     val rels = if (relations.isEmpty) g.schema.relationDefs.map(_.name) else relations
     val verts = g.nodeTables.toSeq.map { case (label, df) =>
@@ -711,11 +1213,15 @@ object GraphAlgos {
       .join(dict.select(col("nid").as("b"), col("vid").as("ub")), Seq("b"))
       .select(col("ua").as("u"), col("ub").as("v"))
     val perNode = triangleCountEdges(pairs)
-    verts
+    // materialize the node-sized result so the three pins behind it can go
+    val out = verts
       .join(dict.select(col("nid").as(IdCol), col("vid")), Seq(IdCol), "left")
       .join(perNode.select(col("vid"), col("n")), Seq("vid"), "left")
       .select(col("label"), col(IdCol),
         coalesce(col("n"), lit(0L)).cast("int").as("triangles"))
+      .localCheckpoint(true)
+    Seq(raw, dict, perNode).foreach(freePinned)
+    out
   }
 
   /** Long-keyed triangle core over raw (u, v) pairs — duplicates,

@@ -430,12 +430,13 @@ final case class PropertyGraph(
     * point mutation cost O(graph) instead of O(one relation). Layout
     * contract identical to [[save]]. The table is eagerly pinned before
     * the write because its own plan typically reads the very parquet
-    * files being overwritten.
+    * files being overwritten, and unpinned once the write has finished.
     */
   def saveRelation(dir: String, relName: String): Unit = {
     val stored = schema.relation(relName).rel.name
-    PropertyGraph.writeClustered(edgeTables(stored).localCheckpoint(true),
-      SrcCol, s"$dir/edges_$stored.parquet")
+    val pinned = edgeTables(stored).localCheckpoint(true)
+    try PropertyGraph.writeClustered(pinned, SrcCol, s"$dir/edges_$stored.parquet")
+    finally graft.Pinned.free(pinned)
   }
 
   /** Persist as CATALOG-BUCKETED tables (`bucketBy(src)` + `sortBy`): unlike

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
@@ -1076,6 +1077,11 @@ object Streams {
     * the batchId-keyed overwrite heals the replay exactly as on the
     * sequential path.
     *
+    * Each write runs under the CALLING thread's Spark local properties
+    * (job group, call site, streaming query id): the pool's threads are
+    * long-lived and would otherwise keep the properties of the drain that
+    * first created them, attributing this drain's jobs to that one.
+    *
     * `-Dgraft.tickWrites.sequential=true` restores the sequential path —
     * the A-arm of the R18AbExperiment measurement, kept so the comparison
     * stays re-runnable.
@@ -1089,8 +1095,12 @@ object Streams {
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutor(tickWritePool)
+      val caller = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+        .map(s => (s.sparkContext, Bridge.localProperties(s.sparkContext)))
+      def asCaller(w: () => Unit): Unit =
+        caller.fold(w()) { case (sc, props) => Bridge.withLocalProperties(sc, props)(w()) }
       val done = Await.result(
-        Future.sequence(writes.map(w => Future(scala.util.Try(w())))),
+        Future.sequence(writes.map(w => Future(scala.util.Try(asCaller(w))))),
         Duration.Inf)
       done.foreach(_.get) // rethrow the first failure AFTER all quiesced
     }

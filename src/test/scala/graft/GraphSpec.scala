@@ -16,6 +16,44 @@ class GraphSpec extends SparkSpec {
   private def names(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.getString(0)).toSeq.sorted
 
+  /** `body`'s value and the Spark jobs it started, counted by job group
+    * with a SparkListener. The bus delivers events in order, so once a
+    * marker job's start arrives every job `body` started has been counted.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val (group, markerGroup) = ("graphspec-jobs", "graphspec-jobs-marker")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`)       => jobs.incrementAndGet()
+          case Some(`markerGroup`) => marker.countDown()
+          case _                   =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(markerGroup, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Rows as sorted value lists, for order-free exact comparison. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0000"))
+
+  /** The id RDDs of the localCheckpoint blocks a frame reads. */
+  private def pinsOf(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+
   test("schema validates clean") {
     assert(DemoGraph.schema.validate().isEmpty)
   }
@@ -494,31 +532,8 @@ class GraphSpec extends SparkSpec {
   test("load reads each table with its declared schema: one job; a missing table still fails") {
     val dir = java.nio.file.Files.createTempDirectory("graft-load").toString
     g.save(dir)
-    val sc = spark.sparkContext
-    val (group, markerGroup) = ("graphspec-load", "graphspec-load-marker")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`)       => jobs.incrementAndGet()
-          case Some(`markerGroup`) => marker.countDown()
-          case _                   =>
-        }
-    }
-    sc.addSparkListener(listener)
-    val loaded =
-      try {
-        sc.setJobGroup(group, "load")
-        val l = try PropertyGraph.load(spark, dir) finally sc.clearJobGroup()
-        // the bus delivers events in order: once the marker job's start
-        // arrives, every job load started has been counted
-        sc.setJobGroup(markerGroup, "marker")
-        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-        assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        l
-      } finally sc.removeSparkListener(listener)
-    assert(jobs.get() === 1, "only the _schema manifest read may start a job")
+    val (loaded, jobs) = jobsOf(PropertyGraph.load(spark, dir))
+    assert(jobs === 1, "only the _schema manifest read may start a job")
     assert(names(DemoGraph.missingTools(loaded, "Bob")) === Seq("Poker Chips"))
     // a declared schema must not turn a missing table into an empty one
     val table = new java.io.File(s"$dir/edges_tool.parquet")
@@ -683,6 +698,157 @@ class GraphSpec extends SparkSpec {
       DemoGraph.schema.nodeDefs.foreach(d => spark.sql(s"DROP TABLE IF EXISTS graftspec_nodes_${d.label}"))
       DemoGraph.schema.relationDefs.foreach(r => spark.sql(s"DROP TABLE IF EXISTS graftspec_edges_${r.name}"))
       spark.sql("DROP TABLE IF EXISTS graftspec_schema")
+    }
+  }
+
+  private val fixtureIds =
+    Seq("a", "b", "c", "d", "x", "iso", "q1", "q2", "\uFF01", "\uD83D\uDE00").sorted
+
+  private def fixtureId(long: Boolean)(v: String): Any =
+    if (v == null || !long) v else fixtureIds.indexOf(v) + 7L
+
+  /** The snapshot-equivalence fixture: a triangle a–b–c with a duplicate
+    * edge, a reversed duplicate and a self-loop; x, an endpoint in no node
+    * table, closing a second triangle a–d–x; an edge to a null endpoint;
+    * isolated nodes (iso, q2) and a node with a null id; and ！–😀, whose
+    * component min differs between UTF-8 byte order (Spark's `min`: ！,
+    * EF BC 81, before F0 9F 98 80) and Java's UTF-16 compareTo (😀).
+    * Long-keyed, the ids keep their string order from 7 up, so "10" < "9"
+    * as strings but not as numbers. `dupNode` adds c again under Q.
+    */
+  private def snapshotFixture(long: Boolean, dupNode: Boolean): PropertyGraph = {
+    import scala.jdk.CollectionConverters._
+    val idType = if (long) LongType else StringType
+    def table(cols: Seq[String], rows: Seq[String]*) =
+      spark.createDataFrame(
+        rows.map(r => org.apache.spark.sql.Row.fromSeq(r.map(fixtureId(long)))).asJava,
+        StructType(cols.map(StructField(_, idType))))
+    val schema = GraphSchema(Seq(NodeDef("P"), NodeDef("Q")),
+      Seq(RelationDef("r", "rInv", "P", "P"), RelationDef("s", "sInv", "P", "Q")),
+      idType)
+    PropertyGraph(schema,
+      Map("P" -> table(Seq("id"), Seq("a"), Seq("b"), Seq("c"), Seq("d"),
+          Seq("iso"), Seq("\uFF01"), Seq("\uD83D\uDE00"), Seq(null)),
+        "Q" -> table(Seq("id"), Seq(Seq("q1"), Seq("q2")) ++
+          (if (dupNode) Seq(Seq("c")) else Nil): _*)),
+      Map(
+        "r" -> table(Seq("src", "dst"),
+          Seq("a", "b"), Seq("b", "c"), Seq("c", "a"), Seq("a", "b"), Seq("b", "a"),
+          Seq("c", "c"), Seq("c", "d"), Seq("d", "x"), Seq("x", "a"), Seq("a", "d"),
+          Seq("\uFF01", "\uD83D\uDE00"), Seq("\uD83D\uDE00", "\uFF01"), Seq("a", null)),
+        "s" -> table(Seq("src", "dst"), Seq("d", "q1"))))
+  }
+
+  test("snapshot kernels ≡ distributed paths: components, triangles, PageRank bit-exact") {
+    import graft.graph.GraphAlgos
+    for (long <- Seq(false, true); dupNode <- Seq(false, true)) {
+      val fx = snapshotFixture(long, dupNode)
+      val at = s"long=$long dupNode=$dupNode"
+      def same(local: org.apache.spark.sql.DataFrame, dist: org.apache.spark.sql.DataFrame,
+          what: String) = {
+        assert(local.schema.map(_.dataType) === dist.schema.map(_.dataType), s"$what $at")
+        assert(rowsOf(local) === rowsOf(dist), s"$what $at")
+      }
+      val cc = GraphAlgos.connectedComponents(fx, Seq("r", "s"))
+      same(cc, GraphAlgos.connectedComponentsDistributed(fx, Seq("r", "s")), "components")
+      same(GraphAlgos.triangleCount(fx, Seq("r")),
+        GraphAlgos.triangleCountDistributed(fx, Seq("r")), "triangles")
+      same(GraphAlgos.pageRankFixedPoint(fx, iters = 5),
+        GraphAlgos.pageRankFixedPoint(fx, iters = 5, localMaxEdges = 0L, localMaxVerts = 0L),
+        "pageRank")
+      if (!long) {
+        val comp = cc.collect().map(r => r.getString(1) -> r.getString(2)).toMap
+        assert(comp("\uD83D\uDE00") === "\uFF01", "component min must follow UTF-8 byte order")
+        assert(comp("q1") === "a" && comp("iso") === "iso" && comp(null) === null)
+        val tri = GraphAlgos.triangleCount(fx, Seq("r")).collect()
+          .map(r => r.getString(1) -> r.getInt(2)).toMap
+        // a–b–c, a–c–d and a–d–x: the dangling endpoint x still closes one
+        assert(tri("a") === 3 && tri("c") === 2 && tri("d") === 2 && tri("iso") === 0)
+      }
+    }
+  }
+
+  test("snapshot weightedDistance ≡ distributed path, null weight included; unknown start throws") {
+    import graft.graph.GraphAlgos
+    for (long <- Seq(false, true)) {
+      val id = fixtureId(long) _
+      // a null weight on c–d: d and x are first reached through it, at a
+      // null distance, until a numeric path arrives
+      val weighted = snapshotFixture(long, dupNode = false).edgeTables("r")
+        .select(col("src"), col("dst"),
+          when(col("src") === col("dst"), lit(0.5))
+            .when(col("src") === lit(id("c")) && col("dst") === lit(id("d")),
+              lit(null).cast(DoubleType))
+            .when(col("src") === lit(id("a")), lit(4.0))
+            .otherwise(lit(1.5)).as("weight"))
+      for (start <- Seq("a", "d", "\uFF01"); iters <- 1 to 4) {
+        val local = GraphAlgos.weightedDistance(weighted, id(start).toString, iters)
+        val dist = GraphAlgos.weightedDistanceDistributed(weighted, id(start).toString, iters)
+        assert(local.schema.map(_.dataType) === dist.schema.map(_.dataType))
+        assert(rowsOf(local) === rowsOf(dist), s"long=$long start=$start iters=$iters")
+      }
+      val unknown = if (long) "999" else "nope"
+      val msgs = Seq[(org.apache.spark.sql.DataFrame, String, Int) => Any](
+          GraphAlgos.weightedDistance, GraphAlgos.weightedDistanceDistributed).map(run =>
+        intercept[IllegalArgumentException](run(weighted, unknown, 2)).getMessage)
+      assert(msgs.distinct === Seq(s"weightedDistance: unknown start node '$unknown'"))
+    }
+  }
+
+  test("snapshot job floor: each PropertyGraph algorithm is a few jobs on the demo graph") {
+    import graft.graph.GraphAlgos
+    val weighted = g.edgeTables("friend").withColumn("weight", lit(1.0))
+    // count the jobs of the cap check, the collect and the pinned result
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "connectedComponents" -> (() => GraphAlgos.connectedComponents(g, Seq("friend", "spouse"))),
+      "triangleCount" -> (() => GraphAlgos.triangleCount(g, Seq("friend"))),
+      "weightedDistance" -> (() => GraphAlgos.weightedDistance(weighted, "person:jane", 3)),
+      "pageRankFixedPoint" -> (() => GraphAlgos.pageRankFixedPoint(g, iters = 5)))
+    for ((name, call) <- calls) {
+      val (out, jobs) = jobsOf(call())
+      assert(jobs <= 3, s"$name started $jobs jobs")
+      assert(out.count() > 0, name)
+    }
+  }
+
+  test("snapshot admits a graph only when its driver heap bound fits") {
+    import graft.graph.GraphAlgos.{LocalMaxEdges, LocalMaxVerts, SnapSize, fitsDriver}
+    // the bench's analytics graph: 2k nodes, ~21k edges of 12-char ids
+    assert(fitsDriver(spark, SnapSize(2000, 21000, 44000, 44000L * 12)))
+    // within both caps, but 36-char string ids at the caps: a ~15 GB
+    // bound, past the user memory of any driver heap under ~38 GB
+    val refs = LocalMaxVerts + 2 * LocalMaxEdges
+    assert(!fitsDriver(spark, SnapSize(LocalMaxVerts, LocalMaxEdges, refs, refs * 36)))
+  }
+
+  test("graph algorithms leave no pins behind but their result") {
+    import graft.graph.GraphAlgos
+    val sc = spark.sparkContext
+    val weighted = g.edgeTables("friend").withColumn("weight", lit(1.0))
+    val dir = java.nio.file.Files.createTempDirectory("graft-pins").toString
+    g.save(dir)
+    val calls = Seq[(String, () => Option[org.apache.spark.sql.DataFrame])](
+      "connectedComponents" -> (() => Some(GraphAlgos.connectedComponents(g, Seq("friend")))),
+      "connectedComponents distributed" ->
+        (() => Some(GraphAlgos.connectedComponentsDistributed(g, Seq("friend")))),
+      "triangleCount" -> (() => Some(GraphAlgos.triangleCount(g, Seq("friend")))),
+      "triangleCount distributed" ->
+        (() => Some(GraphAlgos.triangleCountDistributed(g, Seq("friend")))),
+      "weightedDistance" -> (() => Some(GraphAlgos.weightedDistance(weighted, "person:jane", 3))),
+      "weightedDistance distributed" ->
+        (() => Some(GraphAlgos.weightedDistanceDistributed(weighted, "person:jane", 3))),
+      "pageRankFixedPoint" -> (() => Some(GraphAlgos.pageRankFixedPoint(g, iters = 5))),
+      "pageRankFixedPoint distributed" -> (() => Some(GraphAlgos.pageRankFixedPoint(g,
+        iters = 5, localMaxEdges = 0L, localMaxVerts = 0L))),
+      "relatedN" -> (() => Some(GraphAlgos.relatedN(g, "friend", "person:jane", 2))),
+      "hopDistance" -> (() => Some(GraphAlgos.hopDistance(g, "person:jane", 2))),
+      "saveRelation" -> (() => { g.saveRelation(dir, "friend"); None }))
+    for ((name, call) <- calls) {
+      val before = sc.getPersistentRDDs.keySet
+      val out = call()
+      val added = sc.getPersistentRDDs.keySet -- before -- out.toSeq.flatMap(pinsOf)
+      assert(added.isEmpty, s"$name left ${added.size} pins besides its result")
+      out.foreach(o => assert(o.count() > 0, name))
     }
   }
 }

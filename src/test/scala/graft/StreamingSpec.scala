@@ -922,4 +922,57 @@ class StreamingSpec extends SparkSpec {
     finally sys.props.remove("graft.tickWrites.sequential")
     assert(spark.read.parquet(s"$work/seq").count() === 10L)
   }
+
+  test("tick writes run under the draining query's job group, not a stale one") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    // the write pool's threads outlive a drain; the second drain's tick
+    // writes must carry ITS query's job group, not the first drain's
+    val docs = (0 until 24).map(i =>
+      (i.toLong, (0 until 40).map(j => s"w${i % 5}x$j").mkString(" "))).toDF("doc_id", "text")
+    val store = java.nio.file.Files.createTempDirectory("graft_props_").toString
+    graft.dedup.Dedup.stageCdcChunks(docs.where(col("doc_id") < 8), "doc_id", "text",
+      avgChunkTokens = 5).write(store)
+    val staged = graft.dedup.Dedup.StagedChunkStore.read(spark, store)
+    val batch = docs.where(col("doc_id") >= 8)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val group = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (group == "streamingspec-marker") marker.countDown()
+        else jobs.add((e.time, group))
+      }
+    }
+    val runIds = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val queries = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      // delivered synchronously, before start() returns
+      override def onQueryStarted(e: QueryStartedEvent): Unit = runIds.add(e.runId.toString)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    sc.addSparkListener(listener)
+    spark.streams.addListener(queries)
+    try {
+      def drain() = Streams.cdcIngest(spark, staged, batch, "doc_id", "text",
+        nInputFiles = 4).count()
+      drain()
+      val t0 = System.currentTimeMillis()
+      drain()
+      val t1 = System.currentTimeMillis()
+      sc.setJobGroup("streamingspec-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val groups = jobs.asScala.collect {
+        case (t, group) if t >= t0 && t <= t1 && group != null => group
+      }.toSet
+      assert(groups === Set(runIds.asScala.last),
+        "a job of the second drain ran under another query's job group")
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.streams.removeListener(queries)
+    }
+  }
 }
